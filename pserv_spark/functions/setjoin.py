@@ -228,8 +228,9 @@ def encode_sets(
 
     EAGER-BUILD CONTRACT (ADVICE r9 #5, the iterative.py discipline):
     merely *constructing* any consumer operator executes corpus-sized
-    jobs — the two ``localCheckpoint`` calls here materialize the
-    tokenized relation and the encoded relation at plan-build time —
+    jobs — the ``localCheckpoint`` calls here materialize the
+    tokenized relation and the encoded relation at plan-build time
+    (plus the ranked dictionary when exchange reuse is disabled) —
     and the checkpoint blocks are pinned until the driver GCs the
     DataFrames (Spark's ContextCleaner releases them with their RDDs).
     This trades lineage-replay fault tolerance for not recomputing a
@@ -260,30 +261,37 @@ def encode_sets(
     # but word-token vocabularies grow with the corpus (Heaps' law), so
     # at 100 TB that window is a serial choke point before the dfreq
     # broadcast even becomes a problem.  Same total order, computed
-    # scalably in three node-scale jobs: range-partition the
-    # (dfq, element) keys, rank within each range bucket, then add
-    # per-bucket offsets (the count table is partition-count-sized).
-    # Determinism: range-sampling may place bucket BOUNDARIES
-    # differently across runs/layouts, but (dfq, w) keys are unique
-    # (one row per element) and buckets respect the global order, so
-    # ``offset + in-bucket rank`` equals the global row_number under
-    # the same strict total order no matter where the boundaries fall
-    # — the encoding, and hence every downstream value, is
-    # layout-independent (DETERMINISM gate).
+    # scalably: range-partition the (dfq, element) keys, rank within
+    # each range bucket, then add each bucket's offset (the number of
+    # keys in all lower buckets).
+    # Determinism: range sampling places bucket BOUNDARIES per
+    # execution (RangePartitioner seeds its reservoir sample by RDD
+    # id), so the in-bucket ranks and the bucket counts must describe
+    # ONE realization of the range exchange.  Both are derived below
+    # from the same ``ranked`` subtree inside one plan, and
+    # ReuseExchange runs the two identical range exchanges as one
+    # shuffle.  Within one realization the (dfq, w) keys are unique
+    # (one row per element) and buckets are contiguous in key order,
+    # so ``offset + in-bucket rank`` equals the global row_number
+    # wherever the boundaries fall — the encoding, and hence every
+    # downstream value, is layout-independent (DETERMINISM gate).
+    # Counting the buckets in a separate job (e.g. a driver collect
+    # baked into literals) breaks this: once the reservoir sample (by
+    # default about 3 × 100 keys per range bucket) no longer covers
+    # the universe — 1200 keys vs 1981 shingles at 4 buckets on the
+    # sf0.01 corpus — that job draws its own boundaries and the
+    # encoding stops being a bijection.
     nparts = max(int(sets.sparkSession.sparkContext.defaultParallelism), 1)
     # NOTE the rank path must stay STATS-TRANSPARENT (plain operators
-    # over the dfreq aggregate, no checkpoint and no self-join): two
-    # earlier cuts broke the size estimate of the encoded relation —
-    # a triangular offsets self-join multiplied the statistics-free
-    # join estimates (~universe³), and checkpointing the ranked
-    # relation dropped its row-count stats (a LogicalRDD carries only
-    # sizeInBytes) — and both silently flipped the downstream verify
-    # joins from broadcast to sort-merge (measured: r9 static plan has
-    # 4 BroadcastHashJoins, the broken cut 0; +8% on dedup_containment
-    # at sf0.1 for no scale benefit).  The price of stats transparency
-    # is that the bucket-count job below recomputes the universe-sized
-    # window once (~0.3 s at sf0.1) — corpus-sized work is NOT
-    # recomputed (exploded reads the checkpointed base).
+    # over the dfreq aggregate, no checkpoint and no universe-sized
+    # self-join): two earlier cuts broke the size estimate of the
+    # encoded relation — a triangular offsets self-join multiplied the
+    # statistics-free join estimates (~universe³), and checkpointing
+    # the ranked relation dropped its row-count stats (a LogicalRDD
+    # carries only sizeInBytes) — and both silently flipped the
+    # downstream verify joins from broadcast to sort-merge (measured:
+    # r9 static plan has 4 BroadcastHashJoins, the broken cut 0; +8% on
+    # dedup_containment at sf0.1 for no scale benefit).
     ranked = (
         dfreq.repartitionByRange(nparts, "__dfq", "__w")
         .withColumn("__b", F.spark_partition_id())
@@ -292,27 +300,29 @@ def encode_sets(
             F.row_number().over(Window.partitionBy("__b").orderBy("__dfq", "__w")),
         )
     )
-    # Bucket offsets: prefix-sum of the per-bucket counts on the
-    # driver — CLUSTER-WIDTH metadata (≤ nparts rows, the purge_store
-    # bounded-collect pattern), never data-sized, and the offsets go
-    # back in as literals so no join touches the rank path.
-    counts = {
-        int(r["__b"]): int(r["__c"])
-        for r in ranked.groupBy("__b").agg(F.count("*").alias("__c")).collect()
-    }
-    offs: dict[int, int] = {}
-    acc = 0
-    for b in sorted(counts):
-        offs[b] = acc
-        acc += counts[b]
-    if offs:
-        off_map = F.create_map(
-            *[F.lit(x) for bo in sorted(offs.items()) for x in bo]
-        )
-        tid = (F.element_at(off_map, F.col("__b")) + F.col("__r")).cast("int")
-    else:  # empty element universe: no rows to rank
-        tid = F.col("__r").cast("int")
-    dict_ = ranked.select("__w", tid.alias("__tid"))
+    if sets.sparkSession.conf.get("spark.sql.exchange.reuse", "true") != "true":
+        # Without exchange reuse the two consumers of ``ranked`` would
+        # each sample their own boundaries: pin one realization instead
+        # (same values; the verify joins may lose their broadcasts, see
+        # NOTE above).
+        ranked = ranked.localCheckpoint()
+    # Bucket offsets: exclusive prefix sum of the per-bucket counts.
+    # The window is keyed on a constant, so it runs in one task.  That
+    # is consistent with the module's no-unpartitioned-window rule,
+    # which bans a serial sort of the element universe: this window
+    # sorts the ≤ nparts-row count table (one row per range bucket),
+    # never the elements.
+    counts = ranked.groupBy("__b").agg(F.count("*").alias("__c"))
+    offs = counts.select(
+        "__b",
+        (
+            F.sum("__c").over(Window.partitionBy(F.lit(0)).orderBy("__b"))
+            - F.col("__c")
+        ).alias("__off"),
+    )
+    dict_ = ranked.join(F.broadcast(offs), "__b").select(
+        "__w", (F.col("__off") + F.col("__r")).cast("int").alias("__tid")
+    )
     return (
         exploded.join(F.broadcast(dict_), "__w")
         .groupBy("__id", "__n")

@@ -59,56 +59,6 @@ def _sql_runner(name: str) -> QueryFn:
 #: pinned against the committed CORRECTNESS files in
 #: tests/test_output_policy.py.
 DRIVER_VERIFIED: tuple[str, ...] = (
-    "source_fitslike_scan",
-    "source_jdbc_registry",
-    "stream_cdc_apply",
-    "astro_crossmatch_sph",
-    "vec_crossmatch_zoned",
-    "join_bucketed_colocated",
-    "join_salted_skew",
-    "dedup_cluster_cc",
-    "dedup_embedding_cosine",
-    "ann_pq_topk",
-    "ann_recall_eval",
-    "sketch_hll_estimate",
-    "rollup_serve_monthly",
-    "agg_map_entries",
-    "join_skew_aqe",
-    "source_fitslike_varlen",
-    "udf_zscore_pandas",
-    "decontaminate_ngram",
-    "text_bpe_train",
-    "text_bpe_apply",
-    "decontaminate_embedding",
-    "ab_welch_ztest",
-    "ml_logit_newton",
-    "survival_kaplan_meier",
-    "privacy_k_anonymity",
-    "seq_kleene_funnel",
-    "join_interval_overlap",
-    "dedup_lsh_eval",
-    "text_bpe_vocab_coverage",
-    "mm_keyframe_select",
-    "ingest_orc_roundtrip",
-    "ml_silhouette_eval",
-    "layout_bloom_file_skip",
-    "fn_xml_extract",
-    "stream_jdbc_sink",
-    "agg_weighted_percentile",
-    "text_langid_confusion",
-    "text_fingerprint",
-    "sample_mixture_weights",
-    "lightcurve_stetson_j",
-    "ml_auc_rank",
-    "ml_auc_pr",
-    "ml_calibration_bins",
-    "text_langid_prf1",
-    "text_bm25_ndcg",
-    "feat_hashing_trick",
-    "privacy_l_diversity",
-    "profile_psi_drift",
-    "pipeline_curate_e2e",
-    "ml_lift_gains_curve",
     "feat_target_encode",
     "stream_psi_monitor",
     "dedup_fingerprint",
@@ -371,6 +321,56 @@ DRIVER_VERIFIED: tuple[str, ...] = (
     "mm_feature_embed",
     "mm_phash_near_dup",
     "ingest_csv_roundtrip",
+    "source_fitslike_scan",
+    "source_jdbc_registry",
+    "stream_cdc_apply",
+    "astro_crossmatch_sph",
+    "vec_crossmatch_zoned",
+    "join_bucketed_colocated",
+    "join_salted_skew",
+    "dedup_cluster_cc",
+    "dedup_embedding_cosine",
+    "ann_pq_topk",
+    "ann_recall_eval",
+    "sketch_hll_estimate",
+    "rollup_serve_monthly",
+    "agg_map_entries",
+    "join_skew_aqe",
+    "source_fitslike_varlen",
+    "udf_zscore_pandas",
+    "decontaminate_ngram",
+    "text_bpe_train",
+    "text_bpe_apply",
+    "decontaminate_embedding",
+    "ab_welch_ztest",
+    "ml_logit_newton",
+    "survival_kaplan_meier",
+    "privacy_k_anonymity",
+    "seq_kleene_funnel",
+    "join_interval_overlap",
+    "dedup_lsh_eval",
+    "text_bpe_vocab_coverage",
+    "mm_keyframe_select",
+    "ingest_orc_roundtrip",
+    "ml_silhouette_eval",
+    "layout_bloom_file_skip",
+    "fn_xml_extract",
+    "stream_jdbc_sink",
+    "agg_weighted_percentile",
+    "text_langid_confusion",
+    "text_fingerprint",
+    "sample_mixture_weights",
+    "lightcurve_stetson_j",
+    "ml_auc_rank",
+    "ml_auc_pr",
+    "ml_calibration_bins",
+    "text_langid_prf1",
+    "text_bm25_ndcg",
+    "feat_hashing_trick",
+    "privacy_l_diversity",
+    "profile_psi_drift",
+    "pipeline_curate_e2e",
+    "ml_lift_gains_curve",
 )
 
 

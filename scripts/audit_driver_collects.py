@@ -64,12 +64,6 @@ ALLOWED: dict[str, tuple[int, str]] = {
     ),
     "operators/iterative.py:sample_coreset_kcenter": (2, "1 seed row + k-center picks"),
     # --- metadata-sized driver state (partition lists, manifests, dicts) ---
-    "functions/setjoin.py:encode_sets": (
-        1,
-        "per-range-bucket row counts for the dictionary-rank offsets — "
-        "≤ defaultParallelism rows (cluster-width metadata, the "
-        "purge_store bounded-collect pattern), never data-sized",
-    ),
     "streaming/jobs.py:apply_batch": (1, "distinct touched-bucket ids (<= _BUCKETS)"),
     "operators/lifecycle_ops.py:purge_store": (1, "distinct erased-user bucket ids (<= _BUCKETS)"),
     "operators/pipeline_ops.py:layout_zonemap_prune": (1, "per-FILE min/max stats: file-count-sized manifest"),

@@ -6,7 +6,8 @@ operator's internals" rule):
 
 - directory-aware broadcast size probe (VERDICT r9 #4),
 - scalable ppjoin dictionary rank == the global row_number it replaced
-  (VERDICT r9 #3), and the module-level no-unpartitioned-window rule,
+  (VERDICT r9 #3), also when range sampling cannot cover the element
+  universe, and the module-level no-unpartitioned-window rule,
 - the arithmetic-union verify (no array_union in the jaccard plan),
 - the Arrow-batched LSH bucket kernel == the fold-expression keys
   bit-for-bit,
@@ -19,6 +20,7 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 SETJOIN_SRC = (
@@ -100,12 +102,34 @@ def test_encode_sets_plan_has_no_single_partition_exchange(spark, sf_smoke):
     assert "SinglePartition" not in fplan
 
 
+def _assert_global_row_number_encoding(enc, tok, set_col):
+    """``enc``'s ``__osh`` arrays must equal an independent Python
+    re-derivation of the dictionary: tid = global row_number under
+    (document frequency asc, element)."""
+    from collections import Counter
+
+    rows = {r["__id"]: list(r["__osh"]) for r in enc.collect()}
+    sets = {r["doc_id"]: list(r[set_col]) for r in tok.collect()}
+    df = Counter()
+    for ts in sets.values():
+        df.update(set(ts))
+    order = sorted(df, key=lambda w: (df[w], w))
+    tid = {w: i + 1 for i, w in enumerate(order)}
+    drifted = [
+        doc_id
+        for doc_id, ts in sets.items()
+        if rows.get(doc_id) != sorted(tid[w] for w in set(ts))
+    ]
+    assert not drifted, (
+        f"encoding drifted on {len(drifted)} of {len(sets)} docs "
+        f"(first: {drifted[:5]})"
+    )
+
+
 def test_encode_sets_rank_is_the_global_row_number(spark, sf_smoke):
     """The range-partitioned bucket rank + offset must reproduce the
     exact global row_number under (document frequency asc, element) —
     the ppjoin total order the r9 single-partition window computed."""
-    from collections import Counter
-
     from pserv_spark.functions import distinct_tokens, encode_sets
     from pserv_spark import catalog
 
@@ -113,21 +137,39 @@ def test_encode_sets_rank_is_the_global_row_number(spark, sf_smoke):
     # the two independent executions below)
     docs = catalog.table(spark, sf_smoke, "documents").where(F.col("doc_id") < 300)
     tok = docs.select("doc_id", distinct_tokens("text").alias("ts"))
-    enc = encode_sets(tok, "doc_id", "ts")
-    rows = {r["__id"]: list(r["__osh"]) for r in enc.collect()}
+    _assert_global_row_number_encoding(encode_sets(tok, "doc_id", "ts"), tok, "ts")
 
-    # independent python re-derivation of the dictionary
-    sets = {
-        r["doc_id"]: list(r["ts"]) for r in tok.collect()
+
+@pytest.mark.parametrize("exchange_reuse", ["true", "false"])
+def test_encode_sets_is_a_bijection_when_the_range_sample_is_sparse(
+    spark, sf_oracle, exchange_reuse
+):
+    """The encoding must be the global row_number whatever bucket
+    boundaries range sampling draws.  With one sampled key per
+    partition the sample cannot cover the shingle universe (~2k
+    elements at sf0.01), so independent executions of the range
+    exchange draw different boundaries on any core count: the bucket
+    ranks and bucket offsets must come from one realization.  Pinned
+    with exchange reuse on (one shared range shuffle) and off (the
+    realization must be pinned some other way)."""
+    from pserv_spark.functions import char_shingles, encode_sets
+    from pserv_spark import catalog
+
+    docs = catalog.table(spark, sf_oracle, "documents")
+    sh = docs.select("doc_id", char_shingles("text", 5).alias("sh"))
+    confs = {
+        "spark.sql.execution.rangeExchange.sampleSizePerPartition": "1",
+        "spark.sql.exchange.reuse": exchange_reuse,
     }
-    df = Counter()
-    for ts in sets.values():
-        df.update(set(ts))
-    order = sorted(df, key=lambda w: (df[w], w))
-    tid = {w: i + 1 for i, w in enumerate(order)}
-    for doc_id, ts in sets.items():
-        expected = sorted(tid[w] for w in set(ts))
-        assert rows[doc_id] == expected, f"doc {doc_id}: encoding drifted"
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        enc = encode_sets(sh, "doc_id", "sh")
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    _assert_global_row_number_encoding(enc, sh, "sh")
 
 
 def test_jaccard_pairs_verify_has_no_array_union(spark, sf_smoke):
