@@ -6,10 +6,12 @@ during the survey session.  ``SPARK_SQL[name]`` is the Spark 4.1.2 form
 oracle form with the canonical ``v_events``/``v_emb`` views inlined as
 CTEs (the driver pre-registers only the ten raw tables in DuckDB).
 
-DataFrame re-expressions live in ``pserv_spark.queries.*``; each one is
-differentially tested against the SQL form here (tests/test_dataframe_
-parity.py), which keeps "DataFrame-API vs SQL semantic drift"
-(SURVEY §7 watch list) a tested invariant rather than a hope.
+The registry runs these strings as they stand for every corpus id but
+the few in ``pserv_spark.queries``, whose DataFrame programs measurably
+beat them.  For those ids the string here is the reference the program
+is differentially tested against (tests/test_dataframe_parity.py), which
+keeps "DataFrame-API vs SQL semantic drift" (SURVEY §7 watch list) a
+tested invariant rather than a hope.
 
 Determinism rules (SURVEY §4.5) are baked into every string: DECIMAL
 casts before SUM, no ROUND on exact quotients, BIGINT casts on integer

@@ -31,6 +31,8 @@ token arrays never cross the shuffle except for candidates.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -430,6 +432,13 @@ _EMB_COS_ORACLE = (
 )
 
 
+def _label_sum(labels: DataFrame) -> Decimal:
+    """Exact Σcomp over a label relation.  Summed in DECIMAL(38,0):
+    labels are LONG doc ids, and at 1e10-document scale a LONG sum
+    overflows (two labels of 2^62 already do)."""
+    return labels.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).first()[0]
+
+
 def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the near-dup pair graph → cluster ids.
 
@@ -475,7 +484,7 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("id", F.least("comp", "nc").alias("comp"))
             .localCheckpoint()  # cut the growing lineage each round
         )
-        cur_sum = labels.agg(F.sum("comp")).first()[0]
+        cur_sum = _label_sum(labels)
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum

@@ -207,7 +207,9 @@ def _bucketed_ids_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    emb = _emb(spark, sf_dir).select("vec_id", "emb")
+    # A ragged vector would abort the whole job inside the kernel's
+    # np.array; drop it here, so it is never a query or a candidate.
+    emb = _emb(spark, sf_dir).where(F.size("emb") == EMB_DIM).select("vec_id", "emb")
     planes = np.array(HYPERPLANES, dtype=np.float64).T  # (EMB_DIM, tables*bits)
     n_planes = LSH_TABLES * LSH_BITS
     bit_w = np.array([1 << b for b in range(LSH_BITS)], dtype=np.int64)

@@ -1,14 +1,10 @@
 """Query registry — the single source for ``__spark_entry__.queries()``.
 
-Resolution order per query id:
-
-1. A DataFrame program from ``pserv_spark.queries`` (idiomatic
-   DataFrame-API re-expression; differentially tested against the SQL
-   form).
-2. The validated Spark SQL string from ``pserv_spark.corpus`` run on
-   the catalog views (SURVEY §7: "prefer spark.sql on the registered
-   views where the API adds no value — it is exactly what was
-   validated").
+Each corpus id runs its validated Spark SQL string from
+``pserv_spark.corpus`` on the catalog views: that is exactly what the
+DuckDB oracle checked.  The few ids in ``pserv_spark.queries`` run a
+DataFrame program instead, kept only because it measurably beats the
+SQL form (parity-tested against it in tests/test_dataframe_parity.py).
 
 Extension operators (dedup/LSH, ANN, text analysis, ingestion,
 streaming) register additional entries + oracles via their modules'
@@ -504,7 +500,7 @@ def driver_window_order(
 def build_queries() -> dict[str, QueryFn]:
     out: dict[str, QueryFn] = {name: _sql_runner(name) for name in corpus.QUERY_NAMES}
 
-    # DataFrame-API re-expressions override the SQL fallback.
+    # The measured DataFrame winners replace their SQL form.
     from .queries import DATAFRAME_QUERIES
 
     out.update(DATAFRAME_QUERIES)

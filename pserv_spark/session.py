@@ -49,8 +49,12 @@ def configure(spark: SparkSession) -> SparkSession:
 
 
 def get_session(app_name: str = "pserv_spark", master: str | None = None) -> SparkSession:
-    """Build (or reuse) a session for tests / bench runs."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or reuse) a session for tests / bench runs.
+
+    ``SPARK_GRAFT_CPUS`` sets the task slots; unset, the session uses
+    the CPUs this process may run on.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")

@@ -6,10 +6,11 @@ Usage: python scripts/check_corpus.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pserv_spark.registry import build_queries, build_oracles
 from pserv_spark.session import get_session

@@ -1,8 +1,8 @@
 """Simulate the driver: bare SparkSession (none of pserv_spark's confs),
 import __spark_entry__, smoke entry(), then hash-compare every
 queries() entry against oracle_sql() via DuckDB at sf0.01."""
-import sys, time
-sys.path.insert(0, "/root/repo")
+import os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 # Bare session, deliberately WITHOUT nanosAsLong/UTC — as the driver might.

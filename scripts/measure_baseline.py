@@ -21,7 +21,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FLAGSHIP = [
     "scan_project", "agg_groupby_q1", "join_multiway_q5", "join_left_outer",

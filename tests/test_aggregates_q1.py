@@ -19,7 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pserv_spark.catalog import load_tables
-from pserv_spark.queries.aggregates import _fp_unit
+from pserv_spark.queries import _fp_unit
 
 
 def _dec_unit(c: F.Column, s: int) -> F.Column:

@@ -109,10 +109,11 @@ def test_every_query_id_documented_in_survey():
     registry exposes must appear in the document (and the §2.3 count
     line must match the real registry size)."""
     import re
+    from pathlib import Path
 
     from pserv_spark.registry import build_oracles, build_queries
 
-    survey = open("/root/repo/SURVEY.md").read()
+    survey = (Path(__file__).resolve().parents[1] / "SURVEY.md").read_text()
     queries, oracles = build_queries(), build_oracles()
     missing = [n for n in queries if n not in survey]
     assert not missing, f"undocumented query ids: {missing}"
@@ -125,3 +126,30 @@ def test_every_query_id_documented_in_survey():
     assert n_exact == len(oracles), (n_exact, len(oracles))
     assert n_rows_only == len(queries) - len(oracles)
     assert n_ext == len(queries) - 73
+
+
+def test_session_defaults_to_the_usable_cpus():
+    """With SPARK_GRAFT_CPUS unset, get_session runs one task slot per
+    CPU this process may use, not a fixed count."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    code = (
+        "from pserv_spark.session import get_session\n"
+        "s = get_session('cpu_default')\n"
+        "print(s.sparkContext.defaultParallelism)\n"
+        "s.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    )
+    assert int(out.stdout.split()[-1]) == len(os.sched_getaffinity(0))

@@ -1,7 +1,7 @@
 """DataFrame-API vs validated-SQL parity (SURVEY §5.2 strategy 1).
 
-Every DataFrame re-expression in ``pserv_spark.queries`` must be
-order-insensitively equal to the corpus SQL form it overrides — this
+Every DataFrame program in ``pserv_spark.queries`` must be
+order-insensitively equal to the corpus SQL form it replaces — this
 pins down "DataFrame-API vs SQL semantic drift" (SURVEY §7 watch list)
 before the driver's oracle gate ever sees the DataFrame plan.
 """

@@ -17,11 +17,13 @@ from pserv_spark.operators.zonematch import vec_crossmatch_zoned
 from pserv_spark.plans import physical_plan as _plan
 from pserv_spark.plans import physical_plan
 from pserv_spark.plans import exchange_count, has_nested_loop, pushed_filters, read_schema
-from pserv_spark.queries import DATAFRAME_QUERIES
+from pserv_spark.registry import build_queries
+
+QUERIES = build_queries()
 
 
 def test_broadcast_dim_join_broadcasts(spark, sf_oracle):
-    plan = _plan(DATAFRAME_QUERIES["join_broadcast_dim"](spark, sf_oracle))
+    plan = _plan(QUERIES["join_broadcast_dim"](spark, sf_oracle))
     assert "BroadcastHashJoin" in plan
 
 
@@ -29,12 +31,12 @@ def test_multiway_q5_broadcasts_dims(spark, sf_oracle):
     """The star join's small dims (region/nation/supplier) must not
     shuffle the fact table once each — Catalyst should pick broadcast
     strategies from parquet size stats."""
-    plan = _plan(DATAFRAME_QUERIES["join_multiway_q5"](spark, sf_oracle))
+    plan = _plan(QUERIES["join_multiway_q5"](spark, sf_oracle))
     assert "BroadcastHashJoin" in plan
 
 
 def test_scan_projection_prunes_columns(spark, sf_oracle):
-    cols = read_schema(DATAFRAME_QUERIES["scan_project"](spark, sf_oracle))
+    cols = read_schema(QUERIES["scan_project"](spark, sf_oracle))
     assert set(cols) == {
         "l_orderkey",
         "l_linenumber",
@@ -44,18 +46,18 @@ def test_scan_projection_prunes_columns(spark, sf_oracle):
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_oracle):
-    pushed = pushed_filters(DATAFRAME_QUERIES["filter_compound"](spark, sf_oracle))
+    pushed = pushed_filters(QUERIES["filter_compound"](spark, sf_oracle))
     assert any("o_totalprice" in p for p in pushed)  # range pushed to parquet
 
 
 def test_semi_anti_plan_as_semi_anti(spark, sf_oracle):
-    assert "LeftSemi" in _plan(DATAFRAME_QUERIES["join_semi"](spark, sf_oracle))
-    assert "LeftAnti" in _plan(DATAFRAME_QUERIES["join_anti"](spark, sf_oracle))
-    assert "LeftSemi" in _plan(DATAFRAME_QUERIES["join_in_subquery"](spark, sf_oracle))
+    assert "LeftSemi" in _plan(QUERIES["join_semi"](spark, sf_oracle))
+    assert "LeftAnti" in _plan(QUERIES["join_anti"](spark, sf_oracle))
+    assert "LeftSemi" in _plan(QUERIES["join_in_subquery"](spark, sf_oracle))
 
 
 def test_topk_avoids_global_sort(spark, sf_oracle):
-    plan = _plan(DATAFRAME_QUERIES["topk_global"](spark, sf_oracle))
+    plan = _plan(QUERIES["topk_global"](spark, sf_oracle))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -64,7 +66,7 @@ def test_q5_single_shuffle_when_dims_fit(spark, sf_oracle):
     (catalog.dim), the star join must reduce to scans + broadcasts +
     ONE shuffle (the final aggregation) — the plan shape that keeps
     the fact table from ever being exchanged for a dimension."""
-    df = DATAFRAME_QUERIES["join_multiway_q5"](spark, sf_oracle)
+    df = QUERIES["join_multiway_q5"](spark, sf_oracle)
     assert exchange_count(df) <= 1, physical_plan(df)
 
 
@@ -73,7 +75,7 @@ def test_q1_salted_longsum_shape(spark, sf_oracle):
     (pmod) and sum LONGs, with the decimal descale only in the tiny
     combine stage — never a >18-digit decimal sum buffer over the
     fact scan."""
-    plan = _plan(DATAFRAME_QUERIES["agg_groupby_q1"](spark, sf_oracle))
+    plan = _plan(QUERIES["agg_groupby_q1"](spark, sf_oracle))
     assert "pmod" in plan
     # explain prints top-down: the map-side partial agg + scan are the
     # text BELOW the (only) shuffle exchange.
@@ -83,7 +85,7 @@ def test_q1_salted_longsum_shape(spark, sf_oracle):
 
 
 def test_q1_partial_final_aggregation(spark, sf_oracle):
-    df = DATAFRAME_QUERIES["agg_groupby_q1"](spark, sf_oracle)
+    df = QUERIES["agg_groupby_q1"](spark, sf_oracle)
     plan = _plan(df)
     assert plan.count("HashAggregate") >= 2  # map-side partial + final
     assert "partial_sum" in plan
@@ -125,7 +127,7 @@ def test_naive_crossmatch_is_nested_loop(spark, sf_oracle):
     """Sanity for the test above: the naive theta crossmatch *does*
     plan as a nested-loop join — that contrast is the zoned operator's
     reason to exist."""
-    assert has_nested_loop(DATAFRAME_QUERIES["vec_crossmatch"](spark, sf_oracle))
+    assert has_nested_loop(QUERIES["vec_crossmatch"](spark, sf_oracle))
 
 
 def test_bucketed_join_skips_shuffle(spark, sf_oracle):

@@ -10,7 +10,8 @@ operator's internals" rule):
   universe, and the module-level no-unpartitioned-window rule,
 - the arithmetic-union verify (no array_union in the jaccard plan),
 - the Arrow-batched LSH bucket kernel == the fold-expression keys
-  bit-for-bit,
+  bit-for-bit, and a ragged vector is dropped before it,
+- the dedup_cluster_cc convergence sum stays exact past the LONG range,
 - the LONG-quantized pagerank message sum == the decimal formulation
   bit-for-bit.
 """
@@ -207,6 +208,47 @@ def test_lsh_bucket_kernel_matches_fold_expressions(spark, sf_smoke):
         .collect()
     }
     assert kernel == fold
+
+
+def test_lsh_kernel_skips_a_ragged_vector(spark, sf_smoke, tmp_path):
+    """A vector shorter than EMB_DIM used to reach the Arrow kernel and
+    abort the whole job; it is dropped before the kernel instead, so it
+    is never a query or a candidate."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pserv_spark import catalog
+    from pserv_spark.operators.similarity import ann_lsh_topk
+
+    for f in Path(sf_smoke).glob("*.parquet"):
+        if f.name != "embeddings.parquet":
+            shutil.copyfile(f, tmp_path / f.name)
+    src = pq.read_table(Path(sf_smoke) / "embeddings.parquet")
+    rows = src.to_pylist()
+    ragged = next(r for r in rows if r["vec_id"] == 20)
+    ragged["embedding"] = ragged["embedding"][:-1]
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=src.schema), tmp_path / "embeddings.parquet"
+    )
+
+    catalog._REGISTERED.pop(id(spark), None)
+    try:
+        got = ann_lsh_topk(spark, str(tmp_path)).collect()
+    finally:
+        catalog._REGISTERED.pop(id(spark), None)
+    assert {r.qid for r in got} == set(range(10))
+    assert 20 not in {r.cid for r in got}
+
+
+def test_cluster_cc_label_sum_is_exact_past_the_long_range(spark):
+    """Two labels of 2^62 sum to 2^63, one past the LONG range: the
+    convergence aggregate must return it exactly, not overflow."""
+    from pserv_spark.operators.dedup import _label_sum
+
+    labels = spark.createDataFrame([(1, 2**62), (2, 2**62)], "id long, comp long")
+    assert _label_sum(labels) == 2**63
 
 
 def test_pagerank_long_sum_matches_decimal_formulation(spark, sf_smoke):

@@ -137,8 +137,10 @@ def test_pre_epoch_events_are_dropped_by_watermark_but_kept_by_batch(
     event-time watermark at epoch 0, so a pre-1970 event is
     structurally late for every watermarked stateful op — while the
     BATCH window aggregation keeps it exactly."""
-    from pserv_spark.queries.events import window_tumbling
+    from pserv_spark.registry import build_queries
     from pserv_spark.streaming.jobs import stream_tumbling_watermark
+
+    window_tumbling = build_queries()["window_tumbling"]
 
     batch = window_tumbling(spark, preepoch_tier)
     n_batch_pre = batch.where("EXTRACT(YEAR FROM day) = 1950").count()

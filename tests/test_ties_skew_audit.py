@@ -93,8 +93,9 @@ def test_minmax_by_tie_break_is_pinned(spark, ties_tier):
     an arbitrary order.  The composed (cents, orderkey) key must give
     the highest orderkey for best and lowest for worst among ties."""
     from pserv_spark.catalog import _REGISTERED
-    from pserv_spark.queries.aggregates import agg_minmax_by
+    from pserv_spark.registry import build_queries
 
+    agg_minmax_by = build_queries()["agg_minmax_by"]
     _REGISTERED.pop(id(spark), None)
     try:
         got = {r.o_custkey: r for r in agg_minmax_by(spark, ties_tier).collect()}
